@@ -320,5 +320,5 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     print(json.dumps(run_bench(sf_dir, cpus)))

@@ -8,7 +8,7 @@ Usage:
     python bench_extra.py --repeat N ...         # min-of-N timing
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the cores this process may use).
 
 Timing methodology matches bench.py (``.count()`` on the query result)
 so numbers are comparable with the frozen harness; ``--noop`` switches
@@ -69,7 +69,7 @@ def run_rollup(spark, sf_dir: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     args = [a for a in sys.argv[1:]]
     repeat = 1
     explain = False

@@ -48,37 +48,6 @@ TIERS = ("rollup_1m", "rollup_1h", "rollup_1d")
 LINEAGE_TABLE = "lineage"
 CHUNK_TABLE = "chunks_1m"
 
-_TDIGEST_QAGG = None
-
-
-def _tdigest_qagg_udf():
-    """Arrow grouped-agg UDF: the window's five tier quantiles from a
-    t-digest (kernel/tdigest.py, compression 200 — the same accuracy
-    class as the percentile_approx(200) alternative, but the sketch the
-    north star names, and deterministic: the kernel sorts, so shuffle
-    arrival order cannot change an output bit). Built lazily and cached
-    so importing this module never touches UDF registration."""
-    global _TDIGEST_QAGG
-    if _TDIGEST_QAGG is None:
-        from pyspark.sql.types import ArrayType, DoubleType
-
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def td_q(v: pd.Series) -> list:
-            from chronoxtract_spark.kernel.tdigest import (
-                tdigest_build,
-                tdigest_quantiles,
-            )
-
-            x = v.to_numpy(np.float64)
-            x = x[~np.isnan(x)]
-            if not x.size:
-                return [float("nan")] * 5
-            m, w = tdigest_build(x, compression=200.0)
-            return tdigest_quantiles(m, w, [0.05, 0.25, 0.5, 0.75, 0.95])
-
-        _TDIGEST_QAGG = td_q
-    return _TDIGEST_QAGG
-
 #: per-day lineage metrics ride the write action itself (df.observe)
 #: up to this many day partitions per commit; beyond it the engine
 #: falls back to a post-write read-back aggregation. The cutover is a
@@ -131,8 +100,6 @@ class RollupEngine:
         salts: int = 0,
         kernel_features: bool = True,
         compress: bool = True,
-        feature_mode: str = "core",
-        quantiles: str = "exact",
         verify_readback: bool = False,
     ):
         self.spark = spark
@@ -149,16 +116,6 @@ class RollupEngine:
         self.salts = salts
         self.kernel_features = kernel_features
         self.compress = compress
-        # 'core' = the north-star window features vectorized across
-        # windows; 'full' = the whole kernel battery per window
-        self.feature_mode = feature_mode
-        # 'exact' = sort-based interpolated percentile (windows are
-        # bounded, oracle-checkable); 'approx' = Spark's built-in
-        # Greenwald-Khanna percentile_approx; 'tdigest' = the north
-        # star's named sketch (kernel/tdigest.py, Arrow grouped-agg UDF,
-        # deterministic k-space-bucketing construction) for deployments
-        # that re-merge window quantiles across tiers
-        self.quantiles = quantiles
         # opt-in audit: after each tier write, re-read the written files
         # and check their per-day checksums against the in-flight
         # (observe) metrics — full write verification at the cost of one
@@ -419,59 +376,23 @@ class RollupEngine:
             "day",
         )
 
-    def _window_tier(
-        self,
-        base: DataFrame,
-        trunc: str,
-        out_bucket: str,
-        observed: DataFrame | None = None,
-    ) -> DataFrame:
-        """Shared 1h/1d builder: mergeable moment state + exact summary
-        features + (optionally) whole-series kernel features per
-        (conv_id, bucket) window.
-
-        The kernel-feature pass ships only ``(conv_id, epoch, rate)``
-        through Arrow (12 bytes/row — no timestamp objects) and buckets
-        on integer epoch inside the kernel; the bucket timestamp is
-        reconstructed JVM-side for the join with the SQL state."""
-        bucketed = base.withColumn(out_bucket, F.date_trunc(trunc, "minute_ts"))
-        keys = ["conv_id", out_bucket]
-
+    def build_rollup_1h(self, base: DataFrame) -> DataFrame:
+        """SQL-path 1h tier: mergeable moment state, derived moments and
+        exact window quantiles per (conv_id, hour) over the dense base.
+        Tier windows are bounded (<= 60 points), so the exact sort-based
+        percentile is cheap AND oracle-checkable."""
+        keys = ["conv_id", "hour_ts"]
+        bucketed = base.withColumn("hour_ts", F.date_trunc("hour", "minute_ts"))
         qprobs = F.array(*[F.lit(q) for q in (0.05, 0.25, 0.5, 0.75, 0.95)])
-        if self.quantiles == "tdigest":
-            # Spark disallows grouped-agg pandas UDFs beside JVM
-            # aggregates in one .agg() (INVALID_PANDAS_UDF_PLACEMENT),
-            # so the digest rides a sibling aggregation joined on the
-            # tier keys — both sides leave their exchange hash-
-            # partitioned on those keys, so the join adds a sort but no
-            # third shuffle of the base
-            state = bucketed.groupBy(*keys).agg(
-                *cxf.moment_state_exprs("rate"),
-                F.first("day").alias("day"),
-            )
-            qdf = bucketed.groupBy(*keys).agg(
-                _tdigest_qagg_udf()("rate").alias("q_sketch")
-            )
-            state = state.join(qdf, keys)
-        else:
-            if self.quantiles == "exact":
-                # tier windows are bounded (<= 1440 points), so the
-                # exact sort-based percentile is cheap AND
-                # oracle-checkable; the sketch modes exist for
-                # deployments that re-merge window quantiles across
-                # tiers
-                qagg = F.percentile("rate", qprobs)
-            else:
-                qagg = F.percentile_approx("rate", qprobs, F.lit(200))
-            state = bucketed.groupBy(*keys).agg(
-                *cxf.moment_state_exprs("rate"),
-                qagg.alias("q_sketch"),
-                F.first("day").alias("day"),
-            )
+        state = bucketed.groupBy(*keys).agg(
+            *cxf.moment_state_exprs("rate"),
+            F.percentile("rate", qprobs).alias("q_sketch"),
+            F.first("day").alias("day"),
+        )
         derived = cxf.moments_from_state()
         for name, col in derived.items():
             state = state.withColumn(name, col)
-        state = (
+        return (
             state.withColumn("median", F.col("q_sketch")[2])
             .withColumn("q05", F.col("q_sketch")[0])
             .withColumn("q25", F.col("q_sketch")[1])
@@ -479,46 +400,16 @@ class RollupEngine:
             .withColumn("q95", F.col("q_sketch")[4])
         )
 
-        if not self.kernel_features:
-            return state
-
-        if observed is None:
-            slim = bucketed.select(
-                "conv_id",
-                F.unix_timestamp("minute_ts").alias("t"),
-                F.col("rate").cast("double").alias("rate"),
-            )
-            regen = False
-        else:
-            slim = self._observed_slim(observed).withColumnRenamed("v", "rate")
-            regen = True
-        bucket_seconds = {"hour": 3600, "day": 86400}[trunc]
-        kf = ops_features.kernel_features_epoch_bucketed(
-            slim,
-            bucket_seconds=bucket_seconds,
-            mode=self.feature_mode,
-            regenerate_dense=regen,
-        ).withColumn(
-            out_bucket, F.timestamp_seconds(F.col("bucket_epoch"))
-        ).drop("bucket_epoch")
-        return state.join(kf, keys)
-
     def build_rollup_1h_kernel(self, observed: DataFrame) -> DataFrame:
         """Fast path: the whole 1h tier (mergeable moment state, exact
         window quantiles, north-star features) from ONE kernel pass over
         the observed rows — the dense series never exists Spark-side for
         this tier (kernel.gapfill regeneration + batched window math).
 
-        Requires feature_mode='core'. Output schema matches the SQL-path
-        tier (moments derived from state by column math)."""
+        Output schema matches the SQL-path tier (moments derived from
+        state by column math)."""
         slim = self._observed_slim(observed).withColumnRenamed("v", "rate")
-        kf = ops_features.kernel_features_epoch_bucketed(
-            slim,
-            bucket_seconds=3600,
-            mode="core",
-            regenerate_dense=True,
-            with_state=True,
-        )
+        kf = ops_features.kernel_features_epoch_bucketed(slim, 3600)
         tier = kf.withColumn(
             "hour_ts", F.timestamp_seconds(F.col("bucket_epoch"))
         ).drop("bucket_epoch")
@@ -541,13 +432,7 @@ class RollupEngine:
         Output: one row per (conv_id, bucket_seconds∈{3600,86400},
         bucket_epoch) with state + derived moments + features + day."""
         slim = self._observed_slim(observed).withColumnRenamed("v", "rate")
-        kf = ops_features.kernel_features_epoch_bucketed(
-            slim,
-            bucket_seconds=(3600, 86400),
-            mode="core",
-            regenerate_dense=True,
-            with_state=True,
-        )
+        kf = ops_features.kernel_features_epoch_bucketed(slim, (3600, 86400))
         tier = kf.withColumn(
             "bucket_ts", F.timestamp_seconds(F.col("bucket_epoch"))
         )
@@ -555,11 +440,6 @@ class RollupEngine:
         for name, col in derived.items():
             tier = tier.withColumn(name, col)
         return tier.withColumn("day", F.to_date("bucket_ts"))
-
-    def build_rollup_1h(
-        self, base: DataFrame, observed: DataFrame | None = None
-    ) -> DataFrame:
-        return self._window_tier(base, "hour", "hour_ts", observed=observed)
 
     def build_rollup_1d_from_1h(self, tier_1h: DataFrame) -> DataFrame:
         """1d tier from 1h **state sums** — no base re-scan for the
@@ -702,139 +582,133 @@ class RollupEngine:
         observed = self.build_observed(transcripts)
         observed.cache()
         counts: dict[str, int] = {}
-
-        skips = {
-            tier: (self.committed_days(tier, source_snapshot) if resume else set())
-            for tier in TIERS
-        }
-        all_days = self._candidate_days(observed)  # materializes the cache
-        new_1m = [d for d in all_days if d not in skips["rollup_1m"]]
-        new_1h = [d for d in all_days if d not in skips["rollup_1h"]]
-        new_1d = [d for d in all_days if d not in skips["rollup_1d"]]
-        t = mark("plan_and_skip", t)
-
-        def _day_filter(df, new_days, col="day"):
-            """Resume filter, skipped entirely on a fresh run: the
-            gap-fill fan-out only emits days inside the candidate span
-            union, so when nothing is committed yet the isin is a
-            per-row no-op that still costs real time on the dense tier
-            (BENCH/W1M_COMPONENTS.md: ~3s/40M rows at 8c). Date
-            literals, so a DATE column compares integers."""
-            if len(new_days) == len(all_days):
-                return df
-            return df.filter(F.to_date(F.col(col)).isin(_day_dates(new_days)))
-
-        # -- 1m tier: stream the dense plan straight into the partitioned
-        # write (never cached — the dense fan-out only exists in this one
-        # pass); per-day counts + checksums come from the write action.
-        # DAY-KEYED fan-out (guide §8): the observed-scale segment rows
-        # shuffle on (day, salt) BEFORE the ~1000x minute explode, so
-        # each write task owns ~one day partition — no per-task sort by
-        # partition key, no hundred-writer memory pressure, and day
-        # files come out task-sized (row set identical to the conv-keyed
-        # fan-out; tests pin the equivalence).
-        #
-        # (An overlapped variant — dense write on a pool thread while
-        # the chunk/kernel legs run, guide §2.6 — was measured and
-        # REVERTED: all legs here are CPU/memory-bandwidth-bound on the
-        # same cores, and the interleaving ran the whole pipeline
-        # 1.6x SLOWER than sequential legs at sf1.0.)
-        if new_1m:
-            base = gap_fill_minutes_day_keyed(observed, len(all_days))
-            tier_1m = _day_filter(self.build_rollup_1m(base), new_1m)
-            counts["rollup_1m"] = self._write_with_lineage(
-                tier_1m, "rollup_1m", new_1m, source_snapshot
-            )
-        else:
-            counts["rollup_1m"] = 0
-        t = mark("write_1m", t)
-
-        if new_1m and self.compress:
-            chunks = _day_filter(self.build_chunks(observed), new_1m)
-            self._write_with_lineage(
-                chunks, CHUNK_TABLE, new_1m, source_snapshot,
-                day_repartition=True,
-                observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-            )
-            t = mark("chunks", t)
-
-        # -- 1h + 1d tiers: one shared kernel pass (core mode)
-        # computes both tiers' windows from the same in-kernel dense
-        # series; the SQL path aggregates the dense plan for 1h and
-        # re-sums 1h state for 1d (hierarchical, moments-only — full
-        # 1d quantiles/features are the kernel path's job)
-        need = sorted(set(new_1h) | set(new_1d))
         cached = None
-        if need and self.kernel_features and self.feature_mode == "core":
-            combined = _day_filter(
-                self.build_rollup_tiers_kernel(observed), need
-            ).cache()
-            cached = combined
-            tier_1h = (
-                combined.filter(F.col("bucket_seconds") == 3600)
-                .drop("bucket_seconds", "bucket_epoch")
-                .withColumnRenamed("bucket_ts", "hour_ts")
-            )
-            tier_1h = (
-                _day_filter(tier_1h, new_1h) if new_1h
-                else tier_1h.filter(F.lit(False))
-            )
-            tier_1d = (
-                combined.filter(F.col("bucket_seconds") == 86400)
-                .drop("bucket_seconds", "bucket_epoch")
-                .withColumnRenamed("bucket_ts", "day_ts")
-            )
-            tier_1d = (
-                _day_filter(tier_1d, new_1d) if new_1d
-                else tier_1d.filter(F.lit(False))
-            )
-        elif need:
-            base = gap_fill_minutes(observed).withColumn(
-                "day", F.to_date("minute_ts")
-            )
-            tier_1h_all = _day_filter(
-                self.build_rollup_1h(
-                    base, observed=observed if self.kernel_features else None
-                ),
-                need,
-            ).cache()
-            cached = tier_1h_all
-            tier_1h = (
-                _day_filter(tier_1h_all, new_1h) if new_1h
-                else tier_1h_all.filter(F.lit(False))
-            )
-            tier_1d = self.build_rollup_1d_from_1h(tier_1h_all)
-            tier_1d = (
-                _day_filter(tier_1d, new_1d) if new_1d
-                else tier_1d.filter(F.lit(False))
-            )
-        else:
-            tier_1h = tier_1d = None
+        try:
+            skips = {
+                tier: (self.committed_days(tier, source_snapshot) if resume else set())
+                for tier in TIERS
+            }
+            all_days = self._candidate_days(observed)  # materializes the cache
+            new_1m = [d for d in all_days if d not in skips["rollup_1m"]]
+            new_1h = [d for d in all_days if d not in skips["rollup_1h"]]
+            new_1d = [d for d in all_days if d not in skips["rollup_1d"]]
+            t = mark("plan_and_skip", t)
 
-        counts["rollup_1h"] = (
-            self._write_with_lineage(
-                tier_1h, "rollup_1h", new_1h, source_snapshot,
-                day_repartition=True,
-                observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-            )
-            if tier_1h is not None and new_1h
-            else 0
-        )
-        t = mark("write_1h", t)
-        counts["rollup_1d"] = (
-            self._write_with_lineage(
-                tier_1d, "rollup_1d", new_1d, source_snapshot,
-                day_repartition=True,
-                observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-            )
-            if tier_1d is not None and new_1d
-            else 0
-        )
-        t = mark("write_1d", t)
+            def _day_filter(df, new_days, col="day"):
+                """Resume filter, skipped entirely on a fresh run: the
+                gap-fill fan-out only emits days inside the candidate span
+                union, so when nothing is committed yet the isin is a
+                per-row no-op that still costs real time on the dense tier
+                (BENCH/W1M_COMPONENTS.md: ~3s/40M rows at 8c). Date
+                literals, so a DATE column compares integers."""
+                if len(new_days) == len(all_days):
+                    return df
+                return df.filter(F.to_date(F.col(col)).isin(_day_dates(new_days)))
 
-        if cached is not None:
-            cached.unpersist()
-        observed.unpersist()
+            # -- 1m tier: stream the dense plan straight into the partitioned
+            # write (never cached — the dense fan-out only exists in this one
+            # pass); per-day counts + checksums come from the write action.
+            # DAY-KEYED fan-out (guide §8): the observed-scale segment rows
+            # shuffle on (day, salt) BEFORE the ~1000x minute explode, so
+            # each write task owns ~one day partition — no per-task sort by
+            # partition key, no hundred-writer memory pressure, and day
+            # files come out task-sized (row set identical to the conv-keyed
+            # fan-out; tests pin the equivalence).
+            #
+            # (An overlapped variant — dense write on a pool thread while
+            # the chunk/kernel legs run, guide §2.6 — was measured and
+            # REVERTED: all legs here are CPU/memory-bandwidth-bound on the
+            # same cores, and the interleaving ran the whole pipeline
+            # 1.6x SLOWER than sequential legs at sf1.0.)
+            if new_1m:
+                base = gap_fill_minutes_day_keyed(observed, len(all_days))
+                tier_1m = _day_filter(self.build_rollup_1m(base), new_1m)
+                counts["rollup_1m"] = self._write_with_lineage(
+                    tier_1m, "rollup_1m", new_1m, source_snapshot
+                )
+            else:
+                counts["rollup_1m"] = 0
+            t = mark("write_1m", t)
+
+            if new_1m and self.compress:
+                chunks = _day_filter(self.build_chunks(observed), new_1m)
+                self._write_with_lineage(
+                    chunks, CHUNK_TABLE, new_1m, source_snapshot,
+                    day_repartition=True,
+                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
+                )
+                t = mark("chunks", t)
+
+            # -- 1h + 1d tiers: one shared kernel pass computes both tiers' windows from the same in-kernel dense
+            # series; the SQL path aggregates the dense plan for 1h and
+            # re-sums 1h state for 1d (hierarchical, moments-only — full
+            # 1d quantiles/features are the kernel path's job)
+            need = sorted(set(new_1h) | set(new_1d))
+            if need and self.kernel_features:
+                combined = _day_filter(
+                    self.build_rollup_tiers_kernel(observed), need
+                ).cache()
+                cached = combined
+                tier_1h = (
+                    combined.filter(F.col("bucket_seconds") == 3600)
+                    .drop("bucket_seconds", "bucket_epoch")
+                    .withColumnRenamed("bucket_ts", "hour_ts")
+                )
+                tier_1h = (
+                    _day_filter(tier_1h, new_1h) if new_1h
+                    else tier_1h.filter(F.lit(False))
+                )
+                tier_1d = (
+                    combined.filter(F.col("bucket_seconds") == 86400)
+                    .drop("bucket_seconds", "bucket_epoch")
+                    .withColumnRenamed("bucket_ts", "day_ts")
+                )
+                tier_1d = (
+                    _day_filter(tier_1d, new_1d) if new_1d
+                    else tier_1d.filter(F.lit(False))
+                )
+            elif need:
+                base = gap_fill_minutes(observed).withColumn(
+                    "day", F.to_date("minute_ts")
+                )
+                tier_1h_all = _day_filter(self.build_rollup_1h(base), need).cache()
+                cached = tier_1h_all
+                tier_1h = (
+                    _day_filter(tier_1h_all, new_1h) if new_1h
+                    else tier_1h_all.filter(F.lit(False))
+                )
+                tier_1d = self.build_rollup_1d_from_1h(tier_1h_all)
+                tier_1d = (
+                    _day_filter(tier_1d, new_1d) if new_1d
+                    else tier_1d.filter(F.lit(False))
+                )
+            else:
+                tier_1h = tier_1d = None
+
+            counts["rollup_1h"] = (
+                self._write_with_lineage(
+                    tier_1h, "rollup_1h", new_1h, source_snapshot,
+                    day_repartition=True,
+                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
+                )
+                if tier_1h is not None and new_1h
+                else 0
+            )
+            t = mark("write_1h", t)
+            counts["rollup_1d"] = (
+                self._write_with_lineage(
+                    tier_1d, "rollup_1d", new_1d, source_snapshot,
+                    day_repartition=True,
+                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
+                )
+                if tier_1d is not None and new_1d
+                else 0
+            )
+            t = mark("write_1d", t)
+        finally:
+            if cached is not None:
+                cached.unpersist()
+            observed.unpersist()
         self.last_timings = timings
         return counts
 

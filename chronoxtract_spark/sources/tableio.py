@@ -386,9 +386,7 @@ def get_tableio(spark: SparkSession, root: str | None = None):
                 file=sys.stderr,
             )
     if root is None:
-        root = os.environ.get(
-            "CX_WAREHOUSE", os.path.join(os.getcwd(), "warehouse")
-        )
+        root = os.path.join(os.getcwd(), "warehouse")
     return ParquetBackend(spark, root)
 
 

@@ -93,8 +93,7 @@ def main():
     )
     from chronoxtract_spark.session import get_spark
 
-    spark = get_spark(app_name="cx_ann_scale", master="local[16]",
-                      shuffle_partitions=32,
+    spark = get_spark(app_name="cx_ann_scale",
                       # this VM's hypervisor can freeze the JVM for
                       # minutes in a degraded window; at 1M vectors the
                       # default 10s heartbeat x 60 misses then kills the
@@ -179,7 +178,7 @@ def main():
     with open(sidecar, "a") as f:
         f.write(json.dumps({
             "n": n_actual, "dim": dim, "n_queries": n_queries, "k": k,
-            "n_clusters": n_clusters,
+            "n_clusters": n_clusters, "master": spark.sparkContext.master,
             "when": time.strftime("%Y-%m-%d %H:%M:%S"), "rows": rows,
         }) + "\n")
     by_scale = {}
@@ -208,6 +207,8 @@ def main():
         f"(recall {[r for r in rec['rows'] if r['path'] == 'ivf'][0]['recall_at_k']})"
         for rec in scales
     )
+    # runs before the master was recorded used local[16]
+    masters = ", ".join(sorted({rec.get("master", "local[16]") for rec in scales}))
     md = f"""# BENCH/ANN_SCALE — similarity search at corpus scale, known truth
 
 Generated {time.strftime('%Y-%m-%d %H:%M:%S')} by tools/ann_scale_bench.py.
@@ -217,7 +218,7 @@ Corpus: float32[{dim}] unit vectors in {n_clusters} gaussian clusters
 with per-partition seeded streams. {n_queries} queries (cluster
 members), k={k}; recall measured against the exact brute-force top-k
 (all three paths exclude self-matches).
-local[16], one JVM, each path timed after the corpus is cached.
+{masters}, one JVM, each path timed after the corpus is cached.
 Index paths are measured in deployment shape: the index relation
 (``lsh_index`` / ``ivf_index``) is built and materialized ONCE
 (build sec), then the query batch runs against it (search sec) —

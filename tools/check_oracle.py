@@ -83,12 +83,9 @@ def main():
     import __spark_entry__ as entry_mod
     from chronoxtract_spark.session import get_spark
 
-    # local[16]: correctness is core-count-invariant (every oracle
-    # compare is order-insensitive); 16 threads just halves the
-    # full-registry wall time vs the old local[8]
-    spark = get_spark(
-        app_name="oracle_check", master="local[16]", shuffle_partitions=16
-    )
+    # correctness is core-count-invariant (every oracle compare is
+    # order-insensitive), so the session takes get_spark's host default
+    spark = get_spark(app_name="oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

@@ -36,7 +36,7 @@ sys.path.insert(0, {repo!r})
 from chronoxtract_spark.session import get_spark
 from chronoxtract_spark.synth import synth_transcripts
 
-spark = get_spark(app_name="w1m_gen", master="local[32]", shuffle_partitions=32)
+spark = get_spark(app_name="w1m_gen")
 df = synth_transcripts(spark, n_conversations={n_convs}, seed=42,
                        min_turns={min_turns}, max_turns=8192)
 df.write.mode("overwrite").parquet({input_dir!r})
